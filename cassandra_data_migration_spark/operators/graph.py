@@ -19,13 +19,13 @@ Scale notes:
   alternating large-star/small-star formulation (Kiveris et al.,
   "Connected Components in MapReduce and Beyond", SoCC'14) bounds
   rounds at O(log² n) using these same join/groupBy primitives.
-- The convergence probe is `limit(1)` over changed labels: it
-  short-circuits scanning as soon as one change is found.
+- Convergence costs no extra job: Σ component is observed on each
+  round's checkpoint job, and the round stops when it stops falling.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -85,13 +85,15 @@ def connected_components(
     # the accumulator machinery during the checkpoint, so nothing
     # re-scans the labels).  decimal(38,0): exact, and no int64
     # overflow at any scale (10¹² ids × 10¹² rows ≈ 10²⁴ < 10³⁸).
+    # The starting sum is observed on round 1's ``labels`` union leg,
+    # so it rides the same checkpoint job.
     from pyspark.sql import Observation
 
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
+    def label_sum() -> Column:
+        return F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
 
+    start = Observation()
+    own = labels.observe(start, label_sum())
     prev_sum = None
     converged = False
     rounds = 0
@@ -102,19 +104,18 @@ def connected_components(
         )
         obs = Observation()
         new_labels = (
-            labels.union(msgs)
+            own.union(msgs)
             .groupBy("a")
             .agg(F.min("component").alias("component"))
-            .observe(
-                obs,
-                F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
-            )
+            .observe(obs, label_sum())
             .localCheckpoint(eager=True)
         )
-        if prev_sum is None:
-            prev_sum = _label_sum(labels)
         new_sum = obs.get["s"]
-        labels = new_labels
+        if prev_sum is None and new_sum is not None:
+            # with no rows at all AQE drops the stage holding ``start``;
+            # its sum would be None then, like ``new_sum``
+            prev_sum = start.get["s"]
+        labels = own = new_labels
         if new_sum == prev_sum:
             converged = True
             break

@@ -873,11 +873,16 @@ def mmr_select(
     (``scale`` defaults to e3, not e6, so λ·rel stays far inside
     int64: 64 dims × (10³)² × 10⁶ ≈ 6·10¹³.)
 
-    Scale shape: k driver rounds, each ONE distributed pass — the
-    candidate scan joins a ≤k-row broadcast of the picked vectors
-    (never candidate×candidate), takes ``max`` per candidate, and a
-    TakeOrdered(1) returns a single row to the driver.  O(k·dim)
-    driver state, same budget class as the k-means centroid loop.
+    Scale shape: incremental greedy rounds over one persisted frame.
+    Each candidate row carries ``_maxsim``, its running max similarity
+    to the picked set.  A round derives the next frame from the
+    previous one: it drops the last pick and folds in the dot product
+    with that ONE newly picked vector, passed as a literal array.
+    That is a narrow scan with no exchange and O(n·dim) work per round,
+    not O(n·|S|·dim).  A TakeOrdered(1) returns a single row to the
+    driver, so each round is one Spark job.  Driver state is the
+    picked list, the same budget class as the k-means centroid loop.
+    Each round's frame is persisted and the previous one released.
     The query defaults to the min-id vector; pass ``query_id`` to
     anchor relevance elsewhere.
     """
@@ -889,75 +894,64 @@ def mmr_select(
         ).alias("_qv"),
     )
     if query_id is None:
-        # one job, not two: min id and its vector together (min_by is
-        # deterministic here — rid is unique)
-        row = base.agg(
-            F.min("rid").alias("_r"), F.min_by("_qv", "rid").alias("_v")
-        ).first()
-        query_id, qvec = row["_r"], row["_v"]
+        # min id and its vector together, as one TakeOrdered job with
+        # no exchange (a global min/min_by aggregate costs two)
+        qvec = base.orderBy(F.asc_nulls_last("rid")).limit(1).first()["_qv"]
     else:
         qvec = base.filter(F.col("rid") == query_id).select("_qv").first()[0]
-    qlit = F.array(*[F.lit(int(v)) for v in qvec])
-    scored = base.select(
-        "rid",
-        "_qv",
-        F.aggregate(
-            F.zip_with(F.col("_qv"), qlit, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("rel"),
-    ).persist()
+    frame = base.withColumn("rel", _int_dot("_qv", qvec)).persist()
+    try:
+        nxt = frame.orderBy(F.desc("rel"), "rid").limit(1).first()
+        picked = [(1, nxt["rid"], nxt["rel"])]
+        inv = 1_000_000 - lambda_ppm
+        for step in range(2, k + 1):
+            sim = _int_dot("_qv", nxt["_qv"])
+            prev, frame = frame, (
+                frame.filter(F.col("rid") != nxt["rid"])
+                .withColumn(
+                    "_maxsim",
+                    sim if step == 2 else F.greatest("_maxsim", sim),
+                )
+                .persist()
+            )
+            nxt = (
+                frame.orderBy(
+                    F.desc(
+                        F.lit(lambda_ppm) * F.col("rel")
+                        - F.lit(inv) * F.col("_maxsim")
+                    ),
+                    "rid",
+                )
+                .limit(1)
+                .first()
+            )
+            # released only once the new frame is cached: released
+            # earlier, the new frame would rebuild from the full lineage
+            prev.unpersist()
+            if nxt is None:
+                break
+            picked.append((step, nxt["rid"], nxt["rel"]))
+    finally:
+        frame.unpersist()
+    import pandas as pd
 
-    first = scored.orderBy(F.desc("rel"), "rid").limit(1).first()
-    picked = [(1, first["rid"], first["rel"], list(first["_qv"]))]
-    inv = 1_000_000 - lambda_ppm
-    for step in range(2, k + 1):
-        sel = df.sparkSession.createDataFrame(
-            [(p[1], p[3]) for p in picked], "sid long, _sv array<long>"
-        )
-        # exclusion stays a literal isin list: a broadcast anti-join
-        # variant (plan-shape-stable across rounds, so rounds 3..k hit
-        # the codegen cache) was built and interleaved-A/B'd in round
-        # 12 — it measured ×1.43 SLOWER (med 11.3 s vs 7.9 s, 4 reps)
-        # because each greedy round then pays a broadcast build + an
-        # extra join stage, which at k≈8 dwarfs the whole-stage
-        # recompiles the isin costs.  Measured rejection, guide §1.
-        nxt = (
-            scored.filter(
-                ~F.col("rid").isin([p[1] for p in picked])
-            )
-            .crossJoin(F.broadcast(sel))
-            .withColumn(
-                "_dot",
-                F.aggregate(
-                    F.zip_with("_qv", "_sv", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ),
-            )
-            .groupBy("rid", "rel")
-            # _qv is functionally determined by rid; carrying it via
-            # any_value saves the re-join (one job per greedy round)
-            .agg(
-                F.max("_dot").alias("_maxsim"),
-                F.any_value("_qv").alias("_qv"),
-            )
-            .withColumn(
-                "_score",
-                F.lit(lambda_ppm) * F.col("rel")
-                - F.lit(inv) * F.col("_maxsim"),
-            )
-            .orderBy(F.desc("_score"), "rid")
-            .limit(1)
-            .first()
-        )
-        if nxt is None:
-            break
-        picked.append((step, nxt["rid"], nxt["rel"], list(nxt["_qv"])))
-    scored.unpersist()
+    # from pandas the k rows become a local relation; from a list they
+    # become an RDD whose every action pays a Python worker round trip
     return df.sparkSession.createDataFrame(
-        [(s, r, rel) for s, r, rel, _ in picked],
+        pd.DataFrame(picked, columns=["step", "vec_id", "rel"]),
         "step int, vec_id long, rel long",
+    )
+
+
+def _int_dot(col: str, vec) -> Column:
+    """Exact integer inner product of an ``array<long>`` column with a
+    literal vector of ints.  Built as one SQL expression: from Column
+    calls the same expression costs ~200 JVM round trips at dim 64,
+    and ``mmr_select`` builds one per greedy round."""
+    lits = ", ".join(str(int(v)) for v in vec)
+    return F.expr(
+        f"aggregate(zip_with(`{col}`, array({lits}), (a, b) -> a * b),"
+        " 0L, (acc, x) -> acc + x)"
     )
 
 

@@ -436,9 +436,10 @@ def scaled_shuffle_partitions(
     import math
     import os as _os
 
-    distrust_above = int(
-        _os.environ.get("SPARK_GRAFT_STATS_DISTRUST", str(1 << 50))
-    )
+    try:
+        distrust_above = int(_os.environ["SPARK_GRAFT_STATS_DISTRUST"])
+    except (KeyError, ValueError):
+        distrust_above = 1 << 50
     if est <= 0 or est >= distrust_above:
         return floor
     return max(floor, min(cap, math.ceil(est / bytes_per_task)))

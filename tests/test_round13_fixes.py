@@ -12,6 +12,7 @@ back to the parallelism floor.
 
 from __future__ import annotations
 
+import re
 import time
 
 from pyspark.sql import functions as F
@@ -41,6 +42,28 @@ def test_scaled_shuffle_partitions_distrusts_unknown_stats(spark):
     ), n_scan
 
 
+def test_scaled_shuffle_partitions_ignores_malformed_distrust_env(
+    spark, monkeypatch
+):
+    from cassandra_data_migration_spark.sources.tables import (
+        load_table,
+        scaled_shuffle_partitions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STATS_DISTRUST", "garbage")
+    local = spark.createDataFrame([(1, 10)], "k long, v long")
+    assert (
+        scaled_shuffle_partitions(local)
+        == spark.sparkContext.defaultParallelism
+    )
+    li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey")
+    assert (
+        spark.sparkContext.defaultParallelism
+        <= scaled_shuffle_partitions(li)
+        <= 4096
+    )
+
+
 def test_quorum_on_local_frames_is_fast(spark):
     # the exact round-12 hang shape: quorum over createDataFrame
     # replicas must not manufacture a million-partition exchange
@@ -54,9 +77,19 @@ def test_quorum_on_local_frames_is_fast(spark):
     r0 = mk([(1, 10, 100), (2, 20, 100)])
     r1 = mk([(1, 10, 100), (2, 21, 200)])
     t0 = time.perf_counter()
-    out = quorum_read_repair([r0, r1], "k", "v", "wt").collect()
+    df = quorum_read_repair([r0, r1], "k", "v", "wt")
+    out = df.collect()
     wall = time.perf_counter() - t0
     got = {r["k"]: (r["winner_v"], r["winner_wt"]) for r in out}
     assert got == {2: (21, 200)}
+    # the root cause itself: the key repartition stays at the
+    # parallelism floor instead of the 2²⁰ cap
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    counts = [
+        int(n) for n in re.findall(r", (\d+)\), REPARTITION_BY_NUM", plan)
+    ]
+    assert counts and max(counts) <= spark.sparkContext.defaultParallelism, (
+        plan
+    )
     # pre-fix this stage alone took hours; generous bound for slow hosts
     assert wall < 120, f"quorum over local frames took {wall:.1f}s"

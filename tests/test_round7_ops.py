@@ -139,8 +139,9 @@ def test_cms_estimates_partitioning_invariant(spark):
     )
 
 
-def _mmr_brute(vecs, k, lam=700_000, scale=1000):
-    q = [int(__import__("math").floor(x * scale + 0.5)) for x in vecs[min(vecs)]]
+def _mmr_brute(vecs, k, lam=700_000, scale=1000, query=None):
+    query = min(vecs) if query is None else query
+    q = [int(__import__("math").floor(x * scale + 0.5)) for x in vecs[query]]
     qv = {
         i: [int(__import__("math").floor(x * scale + 0.5)) for x in v]
         for i, v in vecs.items()
@@ -165,28 +166,94 @@ def _mmr_brute(vecs, k, lam=700_000, scale=1000):
     return picked
 
 
-def test_mmr_select_matches_greedy_brute_force(spark):
-    import random
+def _mmr_frame(spark, vecs):
+    import numpy as np
 
-    from cassandra_data_migration_spark.operators.similarity import mmr_select
-
-    rng = random.Random(11)
-    vecs = {
-        i: [rng.uniform(-1, 1) for _ in range(8)] for i in range(30)
-    }
     df = spark.createDataFrame(
         [(i, v) for i, v in vecs.items()], "vec_id long, embedding array<float>"
     )
     # quantize through float32 exactly as the Spark column does
-    import numpy as np
+    return df, {
+        i: [float(np.float32(x)) for x in v] for i, v in vecs.items()
+    }
 
-    vecs32 = {i: [float(np.float32(x)) for x in v] for i, v in vecs.items()}
-    want = _mmr_brute(vecs32, k=6)
-    got = sorted(
-        (r["step"], r["vec_id"], r["rel"])
-        for r in mmr_select(df, k=6).collect()
+
+def _mmr_got(df, **kw):
+    from cassandra_data_migration_spark.operators.similarity import mmr_select
+
+    return sorted(
+        (r["step"], r["vec_id"], r["rel"]) for r in mmr_select(df, **kw).collect()
     )
-    assert got == sorted(want)
+
+
+def test_mmr_select_matches_greedy_brute_force(spark):
+    import random
+
+    rng = random.Random(11)
+    df, vecs32 = _mmr_frame(
+        spark, {i: [rng.uniform(-1, 1) for _ in range(8)] for i in range(30)}
+    )
+    assert _mmr_got(df, k=6) == sorted(_mmr_brute(vecs32, k=6))
+
+
+def test_mmr_select_runs_one_job_per_round(spark):
+    import random
+
+    from cassandra_data_migration_spark.operators.similarity import mmr_select
+
+    rng = random.Random(5)
+    df, _ = _mmr_frame(
+        spark, {i: [rng.uniform(-1, 1) for _ in range(16)] for i in range(100)}
+    )
+    sc = spark.sparkContext
+    group = "mmr-select-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        mmr_select(df, k=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the query lookup, the first pick, then one job per later round
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1 + 1 + 7
+
+
+def test_mmr_select_ties_pick_smallest_id(spark):
+    # ids i and i + 6 are exact duplicates, so their scores tie at every
+    # step; each even id is a 2x (collinear) copy of an odd one
+    base = [[0.6, -0.2, 0.1, 0.3], [0.1, 0.5, -0.4, 0.2], [-0.3, 0.1, 0.7, 0.0]]
+    vecs = {}
+    for i in range(12):
+        v = base[i % 3]
+        vecs[i] = v if i % 2 else [2 * x for x in v]
+    df, vecs32 = _mmr_frame(spark, vecs)
+    for k in (4, 12):
+        assert _mmr_got(df, k=k) == sorted(_mmr_brute(vecs32, k=k))
+
+
+def test_mmr_select_query_id_matches_brute_force(spark):
+    import random
+
+    rng = random.Random(23)
+    df, vecs32 = _mmr_frame(
+        spark, {i: [rng.uniform(-1, 1) for _ in range(8)] for i in range(30)}
+    )
+    want = _mmr_brute(vecs32, k=6, query=17)
+    assert want != _mmr_brute(vecs32, k=6)
+    assert _mmr_got(df, k=6, query_id=17) == sorted(want)
+
+
+def test_mmr_select_leaves_no_cached_frames(spark):
+    import random
+
+    rng = random.Random(3)
+    df, _ = _mmr_frame(
+        spark, {i: [rng.uniform(-1, 1) for _ in range(8)] for i in range(20)}
+    )
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    _mmr_got(df, k=6)
+    _mmr_got(df, k=50)  # stops early when the corpus runs out
+    assert cached().size() == before
 
 
 def test_mmr_select_partitioning_invariant_and_k_capped(spark):
