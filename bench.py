@@ -17,25 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from cassandra_data_migration_spark.session import get_spark  # noqa: E402
-
-
-def _total_shuffle(spark) -> int:
-    """Completed-stage shuffle-read bytes so far (status API); -1 when
-    the UI is unavailable.  Deltas around each query give a per-query
-    shuffle figure — the efficiency metric wall time can't show."""
-    import urllib.request
-
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.loads(r.read())
-        return sum(s.get("shuffleReadBytes", 0) for s in stages)
-    except Exception:
-        return -1
+from tools.scale_gate import total_shuffle  # noqa: E402
 
 
 # The 15 most expensive queries by the round-11 committed snapshot.
@@ -217,13 +199,13 @@ def main() -> None:
             sc.setJobGroup("", "")
 
     for name, fn in queries.items():
-        shuf_before = _total_shuffle(spark)
+        shuf_before = total_shuffle(spark)
         t0 = time.perf_counter()
         t = _timed_run(name, fn)
         timings[name] = t if t is not None else round(
             time.perf_counter() - t0, 4
         )
-        shuf_after = _total_shuffle(spark)
+        shuf_after = total_shuffle(spark)
         if shuf_before >= 0 and shuf_after >= 0:
             delta = shuf_after - shuf_before
             # a negative delta means the UI evicted retained stages

@@ -23,7 +23,6 @@ queries (bench.py additionally calls ``spark.catalog.clearCache()``).
 
 from __future__ import annotations
 
-import os
 import threading
 from collections import deque
 
@@ -33,9 +32,8 @@ from pyspark.sql import DataFrame
 # operators are invoked before any returned plan materializes, the
 # FIFO evicts a frame a still-lazy plan references — safe (Spark
 # recomputes) but it silently re-runs the scan the pin exists to
-# avoid.  Sessions that interleave many lazy pinning operators can
-# raise the bound via SPARK_GRAFT_MAX_PINNED.
-MAX_PINNED = int(os.environ.get("SPARK_GRAFT_MAX_PINNED", "8"))
+# avoid.
+MAX_PINNED = 8
 
 _pinned: deque[DataFrame] = deque()
 _lock = threading.Lock()  # registry bookkeeping only; Spark calls stay outside

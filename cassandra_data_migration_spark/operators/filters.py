@@ -97,14 +97,3 @@ def guardrail_split(
             row_kb = row_kb + t
         cond = cond | (row_kb > F.lit(row_cap_kb))
     return df.filter(~cond), df.filter(cond)
-
-
-def guardrail_flag(
-    df: DataFrame, col: str, cap_kb: float, flag_col: str = "guardrail_violation"
-) -> DataFrame:
-    """P7 (flag form): annotate rows with a violation bit instead of
-    splitting — used when the violations feed a report."""
-    return df.withColumn(
-        flag_col,
-        (F.octet_length(F.col(col).cast("string")) / 1024.0 > F.lit(cap_kb)),
-    )

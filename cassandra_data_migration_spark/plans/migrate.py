@@ -175,10 +175,20 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
         estimate_avg_row_kb,
     )
 
+    if cfg.track_run and not cfg.track_key_col:
+        raise ValueError(
+            "trackRun needs a bucketing key column (trackRun.keyColumn)"
+        )
+    if cfg.previous_run_id is not None and not cfg.track_run:
+        raise ValueError(
+            "trackRun.previousRunId is set but trackRun is off; "
+            "enable trackRun to resume a previous run"
+        )
+
     t0 = time.perf_counter()
     src = spark.read.parquet(cfg.origin_path)
     tracker = run_id = None
-    if cfg.track_run and cfg.track_key_col:
+    if cfg.track_run:
         from cassandra_data_migration_spark.plans.tracker import RunTracker
 
         tracker = RunTracker(
@@ -243,25 +253,19 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
     # (a crashed run leaves no partial bucket data) and (b) the
     # committed-but-unrecorded crash window is closed above by
     # ``reconcile_with_target`` before the scan is clipped.
-    resuming = cfg.previous_run_id is not None and tracker is not None
+    resuming = cfg.previous_run_id is not None
 
     # Rows-written accounting rides the WRITE JOB itself via an
     # Observation — re-reading the target to count would scan the
     # entire written output a second time (at 100 TB, that doubles the
     # job's I/O).  Per-bucket completion counts piggyback on the same
-    # observation as conditional aggregates when the bucket count is
-    # modest (the 32-bucket default), so the tracked path costs zero
-    # extra scans too.
+    # observation as conditional aggregates over the tracker's 32
+    # buckets, so the tracked path costs zero extra scans too.
     from pyspark.sql import Observation
 
     obs = Observation()
     metrics = [F.count(F.lit(1)).alias("rows")]
-    observe_buckets = (
-        tracker is not None
-        and run_id is not None
-        and tracker.num_buckets <= 64
-    )
-    if observe_buckets:
+    if tracker is not None:
         bucket = F.pmod(F.col(cfg.track_key_col), F.lit(tracker.num_buckets))
         metrics += [
             F.sum(F.when(bucket == b, 1).otherwise(0)).alias(f"b{b}")
@@ -273,28 +277,14 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
     )
     observed = obs.get
     n_written = observed["rows"]
-    if tracker is not None and run_id is not None:
+    if tracker is not None:
         # per-bucket completion records (cdm_run_details analogue).
         # On resume the observation covers THIS run's buckets only —
         # previously completed buckets already hold their records
         # under the prior run id.
-        if observe_buckets:
-            counts = [
-                (b, observed[f"b{b}"]) for b in range(tracker.num_buckets)
-            ]
-        else:  # many buckets: one aggregation over the written rows
-            written = spark.read.parquet(cfg.target_path)
-            bucket = F.pmod(
-                F.col(cfg.track_key_col), F.lit(tracker.num_buckets)
-            )
-            counts = [
-                (int(r["_b"]), r["_n"])
-                for r in written.groupBy(bucket.alias("_b"))
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            ]
         recorded = set()
-        for b, n in counts:
+        for b in range(tracker.num_buckets):
+            n = observed[f"b{b}"]
             if n:
                 tracker.record_bucket(run_id, b, "PASSED", rows=n)
                 recorded.add(b)

@@ -17,10 +17,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cassandra_data_migration_spark.operators.joins import (
-    per_bucket_count_compare,
-    reconcile,
-)
+from cassandra_data_migration_spark.operators.joins import reconcile
 
 
 @dataclass
@@ -206,12 +203,3 @@ def schema_diff(origin: DataFrame, target: DataFrame) -> DataFrame:
     only_o = o.exceptAll(t).withColumn("side", F.lit("origin_only"))
     only_t = t.exceptAll(o).withColumn("side", F.lit("target_only"))
     return only_o.unionByName(only_t)
-
-
-def bucket_drill_down(
-    origin: DataFrame, target: DataFrame, key_col: str, num_buckets: int = 32
-) -> DataFrame:
-    """J5 wrapper: which token buckets disagree — the 'narrow the diff
-    before re-scanning' tool for huge tables
-    (docs/07-challenges-risks.md:300-325)."""
-    return per_bucket_count_compare(origin, target, key_col, num_buckets)

@@ -19,6 +19,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half the
+    machine's physical memory in whole GiB, capped at 24g and at least
+    1g, so the JVM never grows past what the machine can back."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys // (1 << 30) // 2))}g"
+
+
 def get_spark(
     app_name: str = "cassandra-data-migration-spark",
     master: str | None = None,
@@ -54,19 +62,19 @@ def get_spark(
         # A lower floor is scale-neutral: production post-shuffle
         # partitions are 10-100 MB+, far above either floor, so the
         # knob only engages where the byte proxy breaks — small
-        # compute-heavy intermediates.  Env-tunable for clusters that
-        # want the stock floor back.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        # compute-heavy intermediates.  Clusters that want the stock
+        # floor back pass it through ``extra_conf``.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or int(cpus)),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # 200+ whole-stage-codegen'd plans in one JVM overflow the
         # default 240 MB reserved code cache; once it fills, the JIT
         # stops compiling and late queries run interpreted (3-6x
@@ -91,19 +99,11 @@ def get_spark(
             "1",
         )
     )
-    # Streaming state backend: at production scale (stream-stream
-    # joins, large keyed state) the in-memory HDFS-backed provider
-    # OOMs executors; RocksDB keeps state off-heap/on-disk with
-    # incremental checkpointing.  Opt-in (SPARK_GRAFT_STATE_STORE=
-    # rocksdb) because tiny test states pay RocksDB's per-task setup
-    # for no benefit — the eviction SEMANTICS are provider-independent
-    # (tests/test_state_bounds.py pins them on the default provider).
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+    # Streaming state stays on Spark's default provider: tiny test
+    # states pay RocksDB's per-task setup for no benefit.  Production
+    # runs with large keyed state pass
+    # ``spark.sql.streaming.stateStore.providerClass`` through
+    # ``extra_conf`` (tests/test_state_bounds.py runs the RocksDB one).
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

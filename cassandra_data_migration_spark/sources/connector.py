@@ -111,8 +111,8 @@ def cassandra_writer_options(
     - ``ratelimit.target`` (rows/s cap) travels as its own CDM
       property name; the connector's native throttle is MB-based
       (``output.throughputMBPerSec``), so the rows/s intent is kept
-      verbatim for the deployment layer (plans/throttle.py implements
-      the engine-side pacing).
+      verbatim for the deployment layer; the engine itself does not
+      pace writes.
     - consistency maps to ``spark.cassandra.output.consistency.level``.
     """
     opts = {"keyspace": keyspace, "table": table}

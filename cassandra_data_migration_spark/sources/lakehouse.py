@@ -60,6 +60,11 @@ class MergeStats:
     rows_written: int
 
 
+# footer reads for tables with at most this many files run on the
+# driver (see parquet_key_ranges)
+DRIVER_FOOTER_MAX = 64
+
+
 def parquet_key_ranges(
     spark: SparkSession,
     path: str,
@@ -84,15 +89,14 @@ def parquet_key_ranges(
     Small tables read their footers ON THE DRIVER (round 12): the
     result is O(files) rows that every caller collects to the driver
     anyway (cow_merge's touch test), so for file counts up to
-    ``SPARK_GRAFT_DRIVER_FOOTER_MAX`` (default 64) a Spark job + a
+    ``DRIVER_FOOTER_MAX`` (64) a Spark job + a
     Python-worker round trip per merge buys nothing — footer reads
     are pure driver-bounded metadata either way (guide §5: the driver
     may do O(metadata) work, never O(data)).  Larger tables keep the
     distributed mapInPandas scan."""
     if files is None:
         files = spark.read.parquet(path).inputFiles()
-    driver_max = int(os.environ.get("SPARK_GRAFT_DRIVER_FOOTER_MAX", "64"))
-    if len(files) <= driver_max:
+    if len(files) <= DRIVER_FOOTER_MAX:
         rows = [
             (local, *_footer_key_range(local, key_col))
             for local in (

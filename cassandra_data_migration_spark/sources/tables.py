@@ -210,6 +210,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 _HEARTBEAT_DAEMONS: dict = {}
+# a bucketed-table dir whose heartbeat is older than this belongs to a
+# dead session and is swept (see ensure_bucketed_table)
+BUCKETED_SWEEP_HOURS = 24
 
 
 def ensure_bucketed_table(
@@ -308,10 +311,7 @@ def ensure_bucketed_table(
         # appId, heartbeat older than any plausible live run) — a live
         # session's heartbeat is re-touched on every call, so age here
         # really means "no session has used this dir for the window"
-        sweep_hours = float(
-            os.environ.get("SPARK_GRAFT_BUCKETED_SWEEP_HOURS", "24")
-        )
-        stale_cutoff = time.time() - sweep_hours * 3600
+        stale_cutoff = time.time() - BUCKETED_SWEEP_HOURS * 3600
         prefix = f"{table}__"
         if os.path.isdir(warehouse):
             for d in os.listdir(warehouse):
@@ -380,6 +380,11 @@ def scaled_bucket_count(
     return nb
 
 
+# size estimates at or above this (2⁵⁰ B ≈ 1 PiB) are Catalyst's
+# "unknown" default, not a measurement (see scaled_shuffle_partitions)
+STATS_DISTRUST_BYTES = 1 << 50
+
+
 def scaled_shuffle_partitions(
     df: DataFrame,
     bytes_per_task: int = 64 << 20,
@@ -418,9 +423,8 @@ def scaled_shuffle_partitions(
     millisecond test-fixture aggregation into a multi-HOUR stage (the
     round-12 ``tests_ok: false`` root cause — test replicas are
     LogicalRDDs, so the quorum repartition hit the cap).  Any estimate
-    at or beyond ``distrust_above`` (default 2⁵⁰ ≈ 1 PiB, an order of
-    magnitude past the 100 TB design point; env
-    ``SPARK_GRAFT_STATS_DISTRUST``) is treated as UNKNOWN → return
+    at or beyond ``STATS_DISTRUST_BYTES`` (2⁵⁰ ≈ 1 PiB, an order of
+    magnitude past the 100 TB design point) is treated as UNKNOWN → return
     ``floor`` (defer to AQE/default parallelism) rather than
     manufacturing a million-task exchange from a number that carries
     no information."""
@@ -434,13 +438,8 @@ def scaled_shuffle_partitions(
     except Exception:
         return floor
     import math
-    import os as _os
 
-    try:
-        distrust_above = int(_os.environ["SPARK_GRAFT_STATS_DISTRUST"])
-    except (KeyError, ValueError):
-        distrust_above = 1 << 50
-    if est <= 0 or est >= distrust_above:
+    if est <= 0 or est >= STATS_DISTRUST_BYTES:
         return floor
     return max(floor, min(cap, math.ceil(est / bytes_per_task)))
 

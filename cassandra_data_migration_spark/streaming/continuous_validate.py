@@ -1,11 +1,9 @@
 """Z7: continuous validation loop.
 
 Exercise 6 re-runs count+sample diffs every 60 s
-(lab/exercises/06-validation-monitoring.md:410-449).  Spark-native:
-a Structured Streaming query on a processingTime trigger whose
-foreachBatch re-runs the J1/J2 validation plan against both stores
-and appends verdict rows to a history sink — the always-on version of
-plans.validate.
+(lab/exercises/06-validation-monitoring.md:410-449).  Each tick
+re-runs the J1/J2 validation plan against both stores and collects
+the verdict — the always-on version of plans.validate.
 """
 
 from __future__ import annotations
@@ -13,7 +11,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from cassandra_data_migration_spark.plans.validate import TableValidation, validate_table
 
@@ -45,8 +43,7 @@ def continuous_validation(
 ) -> list[TableValidation]:
     """The reference's driver loop shape (while true / sleep 60 —
     docs/07-challenges-risks.md:884-913): batch re-validation on a
-    timer.  ``max_ticks`` bounds it for tests; the streaming-trigger
-    variant is ``continuous_validation_stream``."""
+    timer.  ``max_ticks`` bounds it for tests."""
     results: list[TableValidation] = []
     tick = 0
     while max_ticks is None or tick < max_ticks:
@@ -59,37 +56,3 @@ def continuous_validation(
             break
         time.sleep(interval_secs)
     return results
-
-
-def continuous_validation_stream(
-    spark: SparkSession,
-    heartbeat_rows_per_sec: int,
-    origin_path: str,
-    target_path: str,
-    pk: list[str],
-    checkpoint: str,
-    interval: str = "60 seconds",
-    sink: list | None = None,
-):
-    """Trigger-driven variant: a rate-source heartbeat fires a
-    foreachBatch that re-validates and appends the verdict to ``sink``
-    (or a results list).  Returns the started query."""
-    results = sink if sink is not None else []
-
-    def revalidate(batch: DataFrame, batch_id: int) -> None:
-        res = validation_tick(spark, origin_path, target_path, pk, f"batch_{batch_id}")
-        results.append(res)
-
-    hb = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", heartbeat_rows_per_sec)
-        .load()
-    )
-    q = (
-        hb.writeStream.foreachBatch(revalidate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=interval)
-        .start()
-    )
-    q.results = results  # type: ignore[attr-defined]
-    return q

@@ -16,6 +16,7 @@ from cassandra_data_migration_spark.plans.validate import (
     validation_report,
 )
 from cassandra_data_migration_spark.schema import PRIMARY_KEYS, WRITETIME_COL
+from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -244,6 +245,29 @@ def test_run_tracker_resume(spark, tmp_path, keyspace):
     # buckets 0 and 3 are filtered out
     got = {r.id % 8 for r in remaining.collect()}
     assert 0 not in got and 3 not in got and got == {1, 2, 4, 5, 6, 7}
+
+
+def test_track_run_without_key_column_is_rejected(spark, tmp_path):
+    cfg = MigrationConfig(
+        origin_path=f"{SF_SMOKE}/orders.parquet",
+        target_path=str(tmp_path / "t"),
+        track_run=True,
+    )
+    with pytest.raises(ValueError, match="keyColumn"):
+        migrate(spark, cfg)
+    assert not (tmp_path / "t").exists()
+
+
+def test_previous_run_id_without_track_run_is_rejected(spark, tmp_path):
+    cfg = MigrationConfig(
+        origin_path=f"{SF_SMOKE}/orders.parquet",
+        target_path=str(tmp_path / "t"),
+        track_key_col="o_orderkey",
+        previous_run_id="run-1",
+    )
+    with pytest.raises(ValueError, match="trackRun is off"):
+        migrate(spark, cfg)
+    assert not (tmp_path / "t").exists()
 
 
 def test_throttle_schedule_honors_budgets_and_is_stable(spark):

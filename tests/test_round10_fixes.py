@@ -67,7 +67,7 @@ def test_cow_temps_invisible_to_readers(spark, tmp_path):
     assert spark.read.parquet(target).count() == 100
 
 
-def test_bucketed_sweep_gated_on_heartbeat(spark, monkeypatch, tmp_path):
+def test_bucketed_sweep_gated_on_heartbeat(spark, tmp_path):
     """The dead-session sweep keys on the HEARTBEAT file a live session
     re-touches every call — an old dir with a fresh heartbeat is a
     long-lived live session and must survive; an old heartbeat is a
@@ -86,7 +86,8 @@ def test_bucketed_sweep_gated_on_heartbeat(spark, monkeypatch, tmp_path):
     base = "hbtest_sweep"
     live = os.path.join(warehouse, f"{base}__otherapp_live")
     dead = os.path.join(warehouse, f"{base}__otherapp_dead")
-    old = time.time() - 3600
+    # older than the 24 h sweep window
+    old = time.time() - 25 * 3600
     for d in (live, dead):
         os.makedirs(d, exist_ok=True)
         open(os.path.join(d, "_graft_heartbeat"), "w").close()
@@ -94,7 +95,6 @@ def test_bucketed_sweep_gated_on_heartbeat(spark, monkeypatch, tmp_path):
     # live session: dir is old but heartbeat freshly touched
     os.utime(os.path.join(dead, "_graft_heartbeat"), (old, old))
 
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_SWEEP_HOURS", "0.5")
     df = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
     try:
         out = ensure_bucketed_table(spark, df, base, "k", num_buckets=2)

@@ -42,15 +42,14 @@ def test_scaled_shuffle_partitions_distrusts_unknown_stats(spark):
     ), n_scan
 
 
-def test_scaled_shuffle_partitions_ignores_malformed_distrust_env(
-    spark, monkeypatch
+def test_scaled_shuffle_partitions_floor_for_local_frame_bounded_for_scan(
+    spark,
 ):
     from cassandra_data_migration_spark.sources.tables import (
         load_table,
         scaled_shuffle_partitions,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_STATS_DISTRUST", "garbage")
     local = spark.createDataFrame([(1, 10)], "k long, v long")
     assert (
         scaled_shuffle_partitions(local)

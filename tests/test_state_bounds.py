@@ -12,8 +12,8 @@ micro-batch.
 
 Provider note: eviction semantics are state-store-provider
 independent, and the plateau test runs on BOTH — the default
-HDFS-backed provider and RocksDB (the configuration production
-actually runs: SPARK_GRAFT_STATE_STORE=rocksdb, session.py), with the
+HDFS-backed provider and RocksDB (the provider production runs set
+through ``spark.sql.streaming.stateStore.providerClass``), with the
 rocksdb* custom metrics asserted so a silently-ignored conf can't
 fake coverage.
 """
@@ -76,9 +76,10 @@ import pytest  # noqa: E402
 @pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
 def test_interval_join_state_plateaus(spark, tmp_path, provider):
     """Parameterized over BOTH state-store providers: at 100 TB the
-    RocksDB provider is the configuration that actually runs
-    (session.py SPARK_GRAFT_STATE_STORE=rocksdb), so the bound is
-    proven where it matters, not only on the test-default provider."""
+    RocksDB provider is the configuration that actually runs (set
+    through ``spark.sql.streaming.stateStore.providerClass``), so the
+    bound is proven where it matters, not only on the test-default
+    provider."""
     src = str(tmp_path / "events_src")
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")

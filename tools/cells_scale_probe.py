@@ -25,30 +25,16 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from cassandra_data_migration_spark.session import get_spark  # noqa: E402
+from scale_gate import total_shuffle  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 WORK = "/tmp/cells_scale_probe"
-
-
-def _total_shuffle(spark) -> int:
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.loads(r.read())
-        return sum(s.get("shuffleReadBytes", 0) for s in stages)
-    except Exception:
-        return -1
 
 
 def build(spark) -> None:
@@ -65,11 +51,11 @@ def build(spark) -> None:
 
 
 def timed(spark, fn):
-    before = _total_shuffle(spark)
+    before = total_shuffle(spark)
     t0 = time.time()
     rows = fn().count()
     wall = round(time.time() - t0, 2)
-    after = _total_shuffle(spark)
+    after = total_shuffle(spark)
     return {
         "wall_s": wall,
         "rows": rows,

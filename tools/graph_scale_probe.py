@@ -40,30 +40,16 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from cassandra_data_migration_spark.session import get_spark  # noqa: E402
+from scale_gate import total_shuffle  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 WORK = "/tmp/scale_probe"
-
-
-def _total_shuffle(spark) -> int:
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.loads(r.read())
-        return sum(s.get("shuffleReadBytes", 0) for s in stages)
-    except Exception:
-        return -1
 
 
 def build_edge_sets(spark) -> None:
@@ -148,12 +134,12 @@ def run_probe() -> None:
             group = f"{aname}@{gname}"
             spark.sparkContext.setJobGroup(group, group)
             st: dict = {}
-            before = _total_shuffle(spark)
+            before = total_shuffle(spark)
             t0 = time.perf_counter()
             out = fn(edges, nodes, st)
             n_comp = out.select("component").distinct().count()
             wall = round(time.perf_counter() - t0, 2)
-            after = _total_shuffle(spark)
+            after = total_shuffle(spark)
             results.setdefault(gname, {"edges": n_edges})[aname] = {
                 "wall_s": wall,
                 "components": n_comp,
@@ -187,11 +173,11 @@ def run_probe() -> None:
         nodes = docs.select(F.col("doc_id").alias("id"))
         group = f"pagerank@{gname}"
         spark.sparkContext.setJobGroup(group, group)
-        before = _total_shuffle(spark)
+        before = total_shuffle(spark)
         t0 = time.perf_counter()
         n = pagerank(edges, nodes, iterations=5).count()
         wall = round(time.perf_counter() - t0, 2)
-        after = _total_shuffle(spark)
+        after = total_shuffle(spark)
         results[gname]["pagerank"] = {
             "wall_s": wall,
             "rows": n,

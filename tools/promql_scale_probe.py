@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from cassandra_data_migration_spark.session import get_spark  # noqa: E402
+from scale_gate import total_shuffle  # noqa: E402
 from cassandra_data_migration_spark.streaming.promql import (  # noqa: E402
     deriv,
     extrapolated_rate,
@@ -57,22 +58,6 @@ def build(spark, n: int, n_series: int, path: str) -> None:
     )
 
 
-def _shuffle_mb(spark) -> float:
-    try:
-        import urllib.request
-
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.loads(r.read())
-        return sum(s.get("shuffleReadBytes", 0) for s in stages) / 1e6
-    except Exception:
-        return -1.0
-
-
 def main() -> None:
     spark = get_spark(
         app_name="cdm-promql-probe", extra_conf={"spark.ui.enabled": "true"}
@@ -97,17 +82,17 @@ def main() -> None:
                 ("irate", lambda d: irate(d, ["sid"])),
                 ("deriv", lambda d: deriv(d, ["sid"])),
             ):
-                s0 = _shuffle_mb(spark)
+                s0 = total_shuffle(spark)
                 t0 = time.time()
                 cnt = fn(df).count()
-                s1 = _shuffle_mb(spark)
+                s1 = total_shuffle(spark)
                 res[name] = {
                     "wall_s": round(time.time() - t0, 2),
                     "out_rows": cnt,
                     # a failed UI read must read as UNKNOWN, never as
                     # a measured 0 (SCALING.md cites these numbers)
                     "shuffle_mb": (
-                        round(max(s1 - s0, 0), 1)
+                        round(max(s1 - s0, 0) / 1e6, 1)
                         if s0 >= 0 and s1 >= 0
                         else None
                     ),

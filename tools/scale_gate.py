@@ -115,6 +115,10 @@ def _stages(spark) -> list:
 
 
 def total_shuffle(spark) -> int:
+    """Completed-stage shuffle-read bytes so far (status API); -1 when
+    the UI is unavailable.  Deltas around a query give its shuffle
+    figure.  The one stage-API scraper ``bench.py`` and the scale
+    probes share."""
     try:
         return sum(s.get("shuffleReadBytes", 0) for s in _stages(spark))
     except Exception:

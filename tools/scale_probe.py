@@ -26,13 +26,13 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from cassandra_data_migration_spark.session import get_spark  # noqa: E402
+from scale_gate import total_shuffle  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 WORK = "/tmp/scale_probe"
@@ -146,11 +146,11 @@ def run_probe() -> None:
         for name, fn in ops.items():
             group = f"{name}@{tier}"
             spark.sparkContext.setJobGroup(group, group)
-            before = _total_shuffle(spark)
+            before = total_shuffle(spark)
             t0 = time.perf_counter()
             n_rows = fn(docs).count()
             wall = round(time.perf_counter() - t0, 2)
-            after = _total_shuffle(spark)
+            after = total_shuffle(spark)
             results.setdefault(name, {})[tier] = {
                 "wall_s": wall,
                 "rows": n_rows,
@@ -171,21 +171,6 @@ def run_probe() -> None:
             f"{r10['shuffle_read_mb']} | {rs['shuffle_read_mb']} |"
         )
     print(json.dumps({"probe": results}))
-
-
-def _total_shuffle(spark) -> int:
-    """Total completed-stage shuffle-read bytes for the app so far."""
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.loads(r.read())
-        return sum(s.get("shuffleReadBytes", 0) for s in stages)
-    except Exception:
-        return -1
 
 
 if __name__ == "__main__":
